@@ -38,6 +38,8 @@ import os
 
 from pyspark.sql import DataFrame, functions as F
 
+from ..session import scoped_confs
+
 __all__ = ["connected_components", "pagerank", "triangle_counts"]
 
 #: Edge-count bound (directed rows of the deduped bidirectional edge set)
@@ -159,15 +161,11 @@ def connected_components(
     # node types whose Python ordering equals Spark's.
     if n_e <= CC_DRIVER_EDGES and _cc_driver_types_ok(e.schema["s"].dataType):
         return _cc_driver(e, out_node, out_comp)
-    static_loop = n_e <= 2_000_000
-    aqe_before = spark.conf.get("spark.sql.adaptive.enabled", "true")
-    shp_before = spark.conf.get("spark.sql.shuffle.partitions", "200")
-    if static_loop:
-        spark.conf.set("spark.sql.adaptive.enabled", "false")
-        spark.conf.set(
-            "spark.sql.shuffle.partitions", str(max(1, n_e // 65536 + 1))
-        )
-    try:
+    static_loop = {
+        "spark.sql.adaptive.enabled": "false",
+        "spark.sql.shuffle.partitions": str(max(1, n_e // 65536 + 1)),
+    }
+    with scoped_confs(spark, static_loop if n_e <= 2_000_000 else {}):
         labels = (
             e.select(F.col("s").alias("node"))
             .distinct()
@@ -205,9 +203,6 @@ def connected_components(
             labels = new.select("node", "lbl")
             if it > 0 and changed == 0:
                 break
-    finally:
-        spark.conf.set("spark.sql.adaptive.enabled", aqe_before)
-        spark.conf.set("spark.sql.shuffle.partitions", shp_before)
 
     return labels.select(F.col("node").alias(out_node), F.col("lbl").alias(out_comp))
 
@@ -294,15 +289,11 @@ def pagerank(
         return _pagerank_driver(
             e, iters, d_num, d_den, scale, dangling
         )
-    static_loop = n_e <= 2_000_000
-    aqe_before = spark.conf.get("spark.sql.adaptive.enabled", "true")
-    shp_before = spark.conf.get("spark.sql.shuffle.partitions", "200")
-    if static_loop:
-        spark.conf.set("spark.sql.adaptive.enabled", "false")
-        spark.conf.set(
-            "spark.sql.shuffle.partitions", str(max(1, n_e // 65536 + 1))
-        )
-    try:
+    static_loop = {
+        "spark.sql.adaptive.enabled": "false",
+        "spark.sql.shuffle.partitions": str(max(1, n_e // 65536 + 1)),
+    }
+    with scoped_confs(spark, static_loop if n_e <= 2_000_000 else {}):
         nodes = (
             e.select(F.col("s").alias("node"))
             .union(e.select(F.col("d").alias("node")))
@@ -355,9 +346,6 @@ def pagerank(
                     )
                     .localCheckpoint(eager=True)
                 )
-    finally:
-        spark.conf.set("spark.sql.adaptive.enabled", aqe_before)
-        spark.conf.set("spark.sql.shuffle.partitions", shp_before)
     return r.select(
         "node",
         F.col("r").alias("rank_i"),

@@ -10,10 +10,12 @@ against a DuckDB oracle (DuckDB timestamps are UTC-naive).
 from __future__ import annotations
 
 import os
+from contextlib import contextmanager
+from typing import Iterator, Mapping
 
 from pyspark.sql import SparkSession
 
-__all__ = ["get_spark", "stop_spark"]
+__all__ = ["get_spark", "scoped_confs", "stop_spark"]
 
 # Native thread-pool caps for every Python worker (and the driver's own
 # numpy kernels). The gemm/decode strips hand whole Arrow batches to
@@ -90,6 +92,37 @@ def get_spark(app_name: str = "shortcut_spark", cpus: int | None = None) -> Spar
     spark = builder.getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     return spark
+
+
+@contextmanager
+def scoped_confs(spark: SparkSession, confs: Mapping[str, str]) -> Iterator[None]:
+    """Set SQL ``confs`` for the body of a ``with`` block, then put every
+    key back exactly as it was — on normal exit and on an exception. A key
+    with no session value before the block is unset again (not pinned to
+    its default); nested scopes restore in LIFO order. An empty mapping
+    is a no-op, so a gated site reads
+    ``with scoped_confs(spark, {...} if small else {})``.
+
+    Every library conf flip goes through here. The confs are
+    SESSION-GLOBAL: every query the session runs while the block is open
+    sees them, so a scope is not safe for concurrent callers that share
+    one SparkSession.
+    """
+    conf = spark.conf
+    saved: list[tuple[str, str | None]] = []
+    try:
+        for key, value in confs.items():
+            # get(key, None) is the explicitly-set value, or None when the
+            # session has none (a registered default is not reported)
+            saved.append((key, conf.get(key, None)))
+            conf.set(key, value)
+        yield
+    finally:
+        for key, prior in reversed(saved):
+            if prior is None:
+                conf.unset(key)
+            else:
+                conf.set(key, prior)
 
 
 def stop_spark() -> None:

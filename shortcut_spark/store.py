@@ -44,7 +44,6 @@ from __future__ import annotations
 import json
 import os
 import uuid
-from contextlib import contextmanager
 from typing import Any, Callable, Iterable, Sequence
 
 import pyarrow.lib as pa_err
@@ -57,6 +56,7 @@ from .cmp import Condition, conjunction
 from .idx import BLOOM, BTREE, COMPOSITE, HASH, TRIGRAM, IndexSpec, as_index_kind
 from .manifest import DataFile, Manifest
 from .plans import AccessPath, choose_access_path
+from .session import scoped_confs
 
 ROWID = "__rowid"
 
@@ -371,32 +371,37 @@ class Store:
             .withColumn("__pid", F.spark_partition_id())
             .withColumn("__mid", F.monotonically_increasing_id())
         )
-        # lazy cut: the counts collect (the tag pass's first action)
-        # materializes the checkpoint in the SAME job — an eager
-        # localCheckpoint here paid one extra full materialization job per
-        # DataFrame insert for identical determinism (the blocks are cut
-        # before with_id's second pass either way)
-        aqe_before = self.spark.conf.get("spark.sql.adaptive.enabled", "true")
-        if not stable_input:
+        v_before = self.manifest.version
+        try:
+            # lazy cut: the counts collect (the tag pass's first action)
+            # materializes the checkpoint in the SAME job — an eager
+            # localCheckpoint here paid one extra full materialization job
+            # per DataFrame insert for identical determinism (the blocks
+            # are cut before with_id's second pass either way).
             # Under AQE, localCheckpoint's toRdd eagerly MATERIALIZES the
             # tag plan's shuffle map stage (query-stage re-planning buys
             # nothing for a fixed-width repartition) and the counts
             # collect then schedules as a separate reduce job. Planned
             # statically, the checkpoint stays lazy and the counts job
             # runs map+reduce as ONE job (measured ~0.4 s/insert on the
-            # 600k-row bench ingest). Restored right after the counts
-            # pass — the tail sizes its own confs.
-            self.spark.conf.set("spark.sql.adaptive.enabled", "false")
-        tagged = (
-            tagged.persist()
-            if stable_input
-            else tagged.localCheckpoint(eager=False)
-        )
-        v_before = self.manifest.version
-        try:
-            return self._insert_tagged(
-                tagged, schema, watermark, restore_aqe=aqe_before
-            )
+            # 600k-row bench ingest). The scope covers exactly the
+            # checkpoint and the counts collect, and restores AQE even
+            # when the collect raises — the tail sizes its own confs.
+            with scoped_confs(
+                self.spark,
+                {} if stable_input else {"spark.sql.adaptive.enabled": "false"},
+            ):
+                tagged = (
+                    tagged.persist()
+                    if stable_input
+                    else tagged.localCheckpoint(eager=False)
+                )
+                stats = tagged.groupBy("__pid").agg(
+                    F.count("*").alias("cnt"),
+                    F.min("__mid").alias("lo"),
+                    F.max("__mid").alias("hi"),
+                ).collect()
+            return self._insert_tagged(tagged, schema, watermark, stats)
         except BaseException:
             # a failure anywhere before the commit leaves the IN-MEMORY
             # manifest polluted: the batch's data files are registered,
@@ -550,7 +555,7 @@ class Store:
 
         Layout parity with the Spark path's single-file micro-batch
         (:meth:`_cluster_batch` ``n_files == 1``): one parquet file,
-        rows sorted by the index clustering columns (ascending, NULLs
+        rows sorted by :meth:`_cluster_cols` (ascending, NULLs
         first — ``sortWithinPartitions`` semantics), dense rowids from
         the watermark, per-column footer stats for pruning. Registration
         and posting builds go through the shared epilogue
@@ -567,13 +572,7 @@ class Store:
         n = len(data)
         rows = [(watermark + i,) + tuple(r) for i, r in enumerate(data)]
         names = schema.fieldNames()
-        btree_cols = [s.column for s in self.manifest.indices.values() if s.kind == BTREE]
-        hash_specs = [
-            s.member_columns
-            for s in self.manifest.indices.values()
-            if s.kind in (HASH, COMPOSITE)
-        ]
-        sort_cols = btree_cols[:1] if btree_cols else (hash_specs[0] if hash_specs else [])
+        sort_cols = self._cluster_cols()
         if sort_cols:
             idxs = [names.index(c) + 1 for c in sort_cols]
             try:
@@ -730,21 +729,13 @@ class Store:
         IS the dense 0-based position — so rowids need no counts pass, and
         the committed row count reads from the written file's parquet
         footer (``_parquet_rows``), not a count job. Layout matches
-        ``_cluster_batch``'s single-file branch (in-file sort by the
-        leading index columns)."""
+        ``_cluster_batch``'s single-file branch (in-file sort by
+        :meth:`_cluster_cols`)."""
         with_id = df.coalesce(1).select(
             (F.lit(watermark) + F.monotonically_increasing_id()).alias(ROWID),
             *schema.fieldNames(),
         )
-        btree_cols = [
-            s.column for s in self.manifest.indices.values() if s.kind == BTREE
-        ]
-        hash_specs = [
-            s.member_columns
-            for s in self.manifest.indices.values()
-            if s.kind in (HASH, COMPOSITE)
-        ]
-        sort_cols = btree_cols or (hash_specs[0] if hash_specs else [])
+        sort_cols = self._cluster_cols()
         if sort_cols:
             with_id = with_id.sortWithinPartitions(*sort_cols)
         batch_rel = os.path.join(
@@ -771,45 +762,11 @@ class Store:
     # bound keep AQE (skew splits / coalescing earn their jobs there).
     STATIC_INSERT_ROWS = 10_000_000
 
-    @contextmanager
-    def _static_insert_confs(self, n_rows: int):
-        """The matview/CC static-compile pattern for the insert tail: the
-        exact batch row count is driver-known after the counts pass, so
-        the shuffle-partition count derives from it (one per ~250k rows,
-        never the session/core constant). Restores both confs on exit;
-        nested-safe (restores whatever the caller had set)."""
-        aqe = self.spark.conf.get("spark.sql.adaptive.enabled", "true")
-        shp = self.spark.conf.get("spark.sql.shuffle.partitions", "200")
-        self.spark.conf.set("spark.sql.adaptive.enabled", "false")
-        # one shuffle partition per ~50k rows (the _cluster_batch file
-        # sizing), capped at the core count: the r12 ~250k divisor ran the
-        # 600k-row bench ingest 3-wide through the clustering shuffle at
-        # any core count
-        cores = self.spark.sparkContext.defaultParallelism
-        self.spark.conf.set(
-            "spark.sql.shuffle.partitions",
-            str(max(1, min(256, cores, -(-n_rows // 50_000)))),
-        )
-        try:
-            yield
-        finally:
-            self.spark.conf.set("spark.sql.adaptive.enabled", aqe)
-            self.spark.conf.set("spark.sql.shuffle.partitions", shp)
-
     def _insert_tagged(
-        self,
-        tagged: DataFrame,
-        schema: T.StructType,
-        watermark: int,
-        restore_aqe: str | None = None,
+        self, tagged: DataFrame, schema: T.StructType, watermark: int, stats: list
     ) -> int:
-        stats = tagged.groupBy("__pid").agg(
-            F.count("*").alias("cnt"),
-            F.min("__mid").alias("lo"),
-            F.max("__mid").alias("hi"),
-        ).collect()
-        if restore_aqe is not None:
-            self.spark.conf.set("spark.sql.adaptive.enabled", restore_aqe)
+        """Number and write a tagged batch from its counts pass: ``stats``
+        holds one (__pid, cnt, lo, hi) row per non-empty partition."""
         if not stats:
             return 0
         counts = {r["__pid"]: r["cnt"] for r in stats}
@@ -834,12 +791,19 @@ class Store:
             offsets[pid] = acc
             acc += counts[pid]
         n = acc
-        if n <= self.STATIC_INSERT_ROWS:
-            with self._static_insert_confs(n):
-                return self._insert_tagged_tail(
-                    tagged, schema, watermark, offsets, n, contiguous
-                )
-        return self._insert_tagged_tail(tagged, schema, watermark, offsets, n, contiguous)
+        # static compile of the tail (see STATIC_INSERT_ROWS): one shuffle
+        # partition per ~50k rows (the _cluster_batch file sizing), capped
+        # at the core count — the r12 ~250k divisor ran the 600k-row bench
+        # ingest 3-wide through the clustering shuffle at any core count
+        cores = self.spark.sparkContext.defaultParallelism
+        static = {
+            "spark.sql.adaptive.enabled": "false",
+            "spark.sql.shuffle.partitions": str(max(1, min(256, cores, -(-n // 50_000)))),
+        }
+        with scoped_confs(self.spark, static if n <= self.STATIC_INSERT_ROWS else {}):
+            return self._insert_tagged_tail(
+                tagged, schema, watermark, offsets, n, contiguous
+            )
 
     def _insert_tagged_tail(
         self,
@@ -891,7 +855,7 @@ class Store:
         by_size = -(-n // self.ROWS_PER_FILE)
         by_par = min(cores, -(-n // 50_000))
         n_files = max(1, by_size, by_par)
-        btree_cols = [s.column for s in self.manifest.indices.values() if s.kind == BTREE]
+        cols = self._cluster_cols()
         if n_files == 1:
             # single-file micro-batch: repartitionByRange's range SAMPLER
             # job buys nothing when everything lands in one file — a
@@ -899,46 +863,34 @@ class Store:
             # (per-file min/max stats, sorted row groups, every key in
             # exactly one file) for one job less. This is the streaming
             # micro-batch commit-floor path.
-            hash_specs = [
-                s.member_columns
-                for s in self.manifest.indices.values()
-                if s.kind in (HASH, COMPOSITE)
-            ]
-            sort_cols = btree_cols or (hash_specs[0] if hash_specs else [])
             out = with_id.coalesce(1)
-            return out.sortWithinPartitions(*sort_cols) if sort_cols else out
-        if btree_cols:
-            # honor the range index's clustering at write time: disjoint
-            # key ranges per file + sorted row groups → manifest min/max
-            # AND parquet row-group pruning bite on fresh inserts (the
-            # eager index maintenance of src/lib.rs:181-184, expressed as
-            # layout)
-            with_id = with_id.repartitionByRange(n_files, btree_cols[0]).sortWithinPartitions(
-                btree_cols[0]
-            )
-        else:
-            # cluster the batch by the indexed key: each key lands in
-            # exactly one file, so file-level min/max stats alone prune
-            # a point lookup to ~1 file (zero posting jobs) and the
-            # posting set shrinks to ~ndv rows. This is the write
-            # amplification an index costs — one extra shuffle per
-            # batch, the distributed analogue of the reference's
-            # per-insert index maintenance (src/lib.rs:181-184).
-            # A composite index clusters by its full member tuple (lead
-            # column first), which also tightens every member's min/max.
-            hash_cols = [
-                s.member_columns
-                for s in self.manifest.indices.values()
-                if s.kind in (HASH, COMPOSITE)
-            ]
-            if hash_cols:
-                cols = hash_cols[0]
-                with_id = with_id.repartitionByRange(n_files, *cols).sortWithinPartitions(
-                    *cols
-                )
-            elif n_files < 32:
-                with_id = with_id.coalesce(n_files)
+            return out.sortWithinPartitions(*cols) if cols else out
+        if cols:
+            # honor the index's clustering at write time: disjoint key
+            # ranges per file + sorted row groups → manifest min/max AND
+            # parquet row-group pruning bite on fresh inserts, so a point
+            # lookup prunes to ~1 file and the posting set shrinks to ~ndv
+            # rows. This is the write amplification an index costs — one
+            # extra shuffle per batch, the distributed analogue of the
+            # reference's per-insert index maintenance (src/lib.rs:181-184)
+            return with_id.repartitionByRange(n_files, *cols).sortWithinPartitions(*cols)
+        if n_files < 32:
+            with_id = with_id.coalesce(n_files)
         return with_id
+
+    def _cluster_cols(self) -> list[str]:
+        """The one clustering key every write path sorts a batch by (and,
+        across files, range-partitions it by): the lead btree column, else
+        the first hash/composite index's member tuple (lead column first,
+        which also tightens every member's min/max), else none. The Spark
+        paths sort ascending with NULLs first; the driver kernels sort
+        Python rows to the same order."""
+        specs = self.manifest.indices.values()
+        btree = [s.column for s in specs if s.kind == BTREE]
+        if btree:
+            return btree[:1]
+        hashed = [s.member_columns for s in specs if s.kind in (HASH, COMPOSITE)]
+        return list(hashed[0]) if hashed else []
 
     def _register_and_index(self, batch_rel: str) -> list["DataFile"]:
         """Register freshly-written batch files and build postings for every
@@ -3591,17 +3543,7 @@ class Store:
                     + tuple(self._driver_cell(dt, r[c]) for dt, c in zip(dts, names))
                     for r in ins
                 ]
-                btree_cols = [
-                    s.column for s in self.manifest.indices.values() if s.kind == BTREE
-                ]
-                hash_specs = [
-                    s.member_columns
-                    for s in self.manifest.indices.values()
-                    if s.kind in (HASH, COMPOSITE)
-                ]
-                sort_cols = (
-                    btree_cols[:1] if btree_cols else (hash_specs[0] if hash_specs else [])
-                )
+                sort_cols = self._cluster_cols()
                 if sort_cols:
                     idxs = [names.index(c) + 1 for c in sort_cols]
                     tuples.sort(

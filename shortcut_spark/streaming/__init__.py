@@ -13,6 +13,8 @@ import contextlib
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
+from ..session import scoped_confs
+
 
 def _source_bytes(path: str) -> int:
     """Total bytes under a stream source (file or directory of files)."""
@@ -107,13 +109,8 @@ def _sized_state_shuffle(
                 math.ceil(total / _STREAM_BYTES_PER_PARTITION),
             ),
         )
-    key = "spark.sql.shuffle.partitions"
-    before = spark.conf.get(key)
-    spark.conf.set(key, str(n))
-    try:
+    with scoped_confs(spark, {"spark.sql.shuffle.partitions": str(n)}):
         yield
-    finally:
-        spark.conf.set(key, before)
 
 
 def _drain(

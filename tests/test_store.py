@@ -1806,6 +1806,39 @@ def test_insert_failure_mid_tail_restores_manifest(spark, store_path):
     assert {r[st.colnames[1]] for r in st.find([eq(0, "b")]).collect()} == {"B2"}
 
 
+def test_insert_failure_in_counts_pass_restores_session_confs(spark, store_path):
+    """The counts pass of a DataFrame insert plans with AQE off; when it
+    raises, the session confs must be back where they were (it used to
+    leave AQE off for the rest of the session), the manifest must not
+    move, and a retry without the bad row must succeed. The batch is
+    above DRIVER_INSERT_EST_BYTES, so the driver-kernel probe does not
+    evaluate it first."""
+    from pyspark.sql import functions as F
+    from pyspark.sql import types as T
+
+    st = Store.create(
+        spark, store_path, T.StructType([T.StructField("id", T.LongType())])
+    )
+    st.insert([(-1,)])
+    keys = ("spark.sql.adaptive.enabled", "spark.sql.shuffle.partitions")
+    confs_before = {k: spark.conf.get(k, None) for k in keys}
+    v_before = st.manifest.version
+
+    @F.udf("long")
+    def fail_on_one(i):
+        if i == 123_456:
+            raise ValueError("bad row")
+        return i
+
+    batch = spark.range(400_000)
+    with pytest.raises(Exception, match="bad row"):
+        st.insert(batch.select(fail_on_one("id").alias("id")))
+    assert {k: spark.conf.get(k, None) for k in keys} == confs_before
+    assert st.manifest.version == v_before
+    assert st.insert(batch.where(F.col("id") != 123_456)) == 399_999
+    assert len(st) == 400_000
+
+
 def test_insert_failure_on_pinned_handle_keeps_snapshot(spark, store_path):
     """A failed write on a handle opened at an OLDER snapshot must
     restore that snapshot, not fast-forward to CURRENT: _restore_manifest
