@@ -14,19 +14,23 @@ Iceberg-style:
 - ``indices: HashMap``   → ``IndexSpec`` per column (file-granular posting
   parts + rows/ndv stats for the access-path cost model)
 
-Commits are snapshot-isolated: each commit writes ``_manifests/v{N}.json``
-and atomically flips the ``CURRENT`` pointer (``os.replace``). Readers open
-a manifest version and never see partial writes — the analogue of the
-reference's single-writer ``&mut self`` discipline (``src/lib.rs:140,178``)
-with multi-reader snapshots for free. On a real object store the pointer
-flip would be a conditional PUT; the layout is unchanged.
+Commits are snapshot-isolated: each commit creates ``_manifests/v{N}.json``
+exclusively (one writer wins each version; that create is the commit)
+and then flips the ``CURRENT`` hint (``os.replace``), which readers roll
+forward past if it lags. Readers open a manifest version and
+never see partial writes — the analogue of the reference's single-writer
+``&mut self`` discipline (``src/lib.rs:140,178``) with multi-reader
+snapshots for free. On a real object store the exclusive create would be
+a conditional PUT; the layout is unchanged.
 """
 
 from __future__ import annotations
 
 import json
 import os
+import re
 import time
+import uuid
 from dataclasses import dataclass, field
 
 from pyspark.sql import types as T
@@ -291,10 +295,38 @@ class Manifest:
     def load(cls, table_path: str, version: int | None = None) -> "Manifest":
         mdir = cls._dir(table_path)
         if version is None:
-            with open(os.path.join(mdir, "CURRENT")) as fh:
-                version = int(fh.read().strip())
+            version = cls.head(table_path)
         with open(os.path.join(mdir, f"v{version}.json")) as fh:
             return cls.from_json(json.load(fh), parts_dir=mdir)
+
+    @classmethod
+    def head(cls, table_path: str) -> int:
+        """The latest committed version (0 before the first commit): the
+        ``CURRENT`` hint rolled forward over every ``v<N>.json`` published
+        after it. A commit IS its exclusive version-file create, so a
+        ``CURRENT`` write that failed or was cut off after it only lags
+        (and if ``vacuum`` has since removed the version it names, the
+        listing decides)."""
+        mdir = cls._dir(table_path)
+        try:
+            with open(os.path.join(mdir, "CURRENT")) as fh:
+                version = int(fh.read().strip())
+        except FileNotFoundError:
+            version = 0
+        if version and not os.path.exists(os.path.join(mdir, f"v{version}.json")):
+            version = max(cls.versions(table_path), default=0)
+        while os.path.exists(os.path.join(mdir, f"v{version + 1}.json")):
+            version += 1
+        return version
+
+    @classmethod
+    def versions(cls, table_path: str) -> list[int]:
+        """Retained version numbers, ascending: exactly the
+        ``v<N>.json`` files — never part files or tmp files."""
+        names = os.listdir(cls._dir(table_path))
+        return sorted(
+            int(m.group(1)) for m in (re.fullmatch(r"v(\d+)\.json", f) for f in names) if m
+        )
 
     @classmethod
     def version_as_of(cls, table_path: str, ts: float) -> int:
@@ -306,14 +338,12 @@ class Manifest:
         ``ts`` (the history needed has been vacuumed or never existed)."""
         mdir = cls._dir(table_path)
         best = None
-        for name in os.listdir(mdir):
-            if not (name.startswith("v") and name.endswith(".json")):
-                continue
-            v = int(name[1:-5])
-            with open(os.path.join(mdir, name)) as fh:
+        for v in cls.versions(table_path):
+            name = os.path.join(mdir, f"v{v}.json")
+            with open(name) as fh:
                 at = json.load(fh).get("committed_at")
             if at is None:
-                at = os.path.getmtime(os.path.join(mdir, name))
+                at = os.path.getmtime(name)
             if at <= ts and (best is None or v > best):
                 best = v
         if best is None:
@@ -323,33 +353,38 @@ class Manifest:
         return best
 
     def commit(self, table_path: str) -> "Manifest":
-        """Write the next manifest version and flip CURRENT atomically.
+        """Publish the next manifest version.
 
-        Optimistic single-writer check: if CURRENT moved past the version
-        this manifest was loaded at, another writer committed concurrently —
-        refuse rather than silently drop their commit (the reference's
-        ``&mut self`` exclusivity, enforced at the storage layer; a real
-        deployment would retry on top of a conditional PUT)."""
+        Optimistic single-writer commit (the reference's ``&mut self``
+        exclusivity, enforced at the storage layer): a :meth:`head` that
+        moved past the version this manifest was loaded at fails fast,
+        and ``v{N+1}.json`` is created EXCLUSIVELY — a hard link from
+        this writer's own tmp file, the local analogue of a conditional
+        PUT — so of two writers that both passed the check exactly one
+        publishes and the other raises instead of overwriting it. Every
+        name a commit writes carries a writer-unique token.
+
+        That exclusive create is the one commit point. The handle
+        changes right after it and never before: a failed commit leaves
+        ``version`` and the staged state as they were, the same handle
+        can retry, and "version moved" means "committed". ``CURRENT`` is
+        flipped afterwards as a hint only (:meth:`head` rolls forward
+        past a stale one), so a failed flip loses and wedges nothing."""
         mdir = self._dir(table_path)
-        cur_path = os.path.join(mdir, "CURRENT")
-        if os.path.exists(cur_path):
-            with open(cur_path) as fh:
-                on_disk = int(fh.read().strip())
-            if on_disk != self.version:
-                raise RuntimeError(
-                    f"concurrent commit detected: CURRENT is v{on_disk}, "
-                    f"this writer loaded v{self.version}"
-                )
-        self.version += 1
-        self.committed_at = time.time()
+        on_disk = self.head(table_path)
+        if on_disk != self.version:
+            raise RuntimeError(
+                f"concurrent commit detected: latest is v{on_disk}, "
+                f"this writer loaded v{self.version}"
+            )
+        version = self.version + 1
+        token = uuid.uuid4().hex[:8]
         os.makedirs(mdir, exist_ok=True)
 
         def _write_part(chunk: list, k: int) -> dict:
-            name = f"v{self.version}-files-p{k}.json"
-            ptmp = os.path.join(mdir, name + ".tmp")
-            with open(ptmp, "w") as fh:
+            name = f"v{version}-files-p{k}-{token}.json"
+            with open(os.path.join(mdir, name), "w") as fh:
                 json.dump([f.to_json() for f in chunk], fh)
-            os.replace(ptmp, os.path.join(mdir, name))
             return {
                 "part": name,
                 "n": len(chunk),
@@ -359,7 +394,8 @@ class Manifest:
                 "stats": _agg_part_stats(chunk),
             }
 
-        if isinstance(self.files, PartedFileList):
+        parted = isinstance(self.files, PartedFileList)
+        if parted:
             # Iceberg-style PART REUSE — the append-only fast path (any
             # mutation materializes `files` to a plain list and takes the
             # full-split branch below): existing parts are referenced
@@ -367,17 +403,14 @@ class Manifest:
             # parts-meta), not O(files)); only tail chunks that reached
             # MANIFEST_PART_SIZE become new parts, and the remainder
             # persists as the root-level "files" tail.
-            pf = self.files
             d = self.to_json_meta()
-            parts_meta = list(pf._meta)
-            tail = list(pf.tail)
+            parts_meta = list(self.files._meta)
+            tail = list(self.files.tail)
             while len(tail) >= MANIFEST_PART_SIZE:
                 chunk, tail = tail[:MANIFEST_PART_SIZE], tail[MANIFEST_PART_SIZE:]
                 parts_meta.append(_write_part(chunk, len(parts_meta)))
             d["files"] = [f.to_json() for f in tail]
             d["file_parts"] = parts_meta
-            pf._meta = parts_meta
-            pf.tail = tail
         else:
             d = self.to_json()
             if len(d["files"]) > MANIFEST_PART_SIZE:
@@ -395,6 +428,8 @@ class Manifest:
                     parts_meta.append(_write_part(chunk, k // MANIFEST_PART_SIZE))
                 d["files"] = []
                 d["file_parts"] = parts_meta
+        d["version"] = version
+        d["committed_at"] = time.time()
         # the version being written records the deletes ITS commit staged
         # (pending_cdf), not the predecessor's record that to_json_meta
         # carries; staging then resets to the no-deletes default so an
@@ -403,15 +438,32 @@ class Manifest:
         d["cdf_deletes"] = (
             None if self.pending_cdf is None else list(self.pending_cdf)
         )
+        mpath = os.path.join(mdir, f"v{version}.json")
+        tmp = os.path.join(mdir, f".v{version}.json.{token}.tmp")
+        try:
+            with open(tmp, "w") as fh:
+                json.dump(d, fh, indent=1)
+            os.link(tmp, mpath)
+        except FileExistsError:
+            raise RuntimeError(
+                f"concurrent commit detected: v{version} was published by "
+                f"another writer, this writer loaded v{self.version}"
+            ) from None
+        finally:
+            if os.path.exists(tmp):
+                os.remove(tmp)
+        self.version = version
+        self.committed_at = d["committed_at"]
         self.cdf_deletes = d["cdf_deletes"]
         self.pending_cdf = []
-        mpath = os.path.join(mdir, f"v{self.version}.json")
-        tmp = mpath + ".tmp"
-        with open(tmp, "w") as fh:
-            json.dump(d, fh, indent=1)
-        os.replace(tmp, mpath)
-        cur_tmp = os.path.join(mdir, "CURRENT.tmp")
-        with open(cur_tmp, "w") as fh:
-            fh.write(str(self.version))
-        os.replace(cur_tmp, os.path.join(mdir, "CURRENT"))
+        if parted:
+            self.files._meta = parts_meta
+            self.files.tail = tail
+        cur_tmp = os.path.join(mdir, f".CURRENT.{token}.tmp")
+        try:
+            with open(cur_tmp, "w") as fh:
+                fh.write(str(version))
+            os.replace(cur_tmp, os.path.join(mdir, "CURRENT"))
+        except OSError:
+            pass  # the commit stands; head() rolls forward past the hint
         return self

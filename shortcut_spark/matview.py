@@ -311,7 +311,9 @@ class MatView:
                     # base_version is STAGED as a manifest prop before the
                     # merge, so it persists inside the merge's one atomic
                     # manifest flip (r12, the stream_epoch pattern): state
-                    # and version can never be durable separately.
+                    # and version can never be durable separately — a
+                    # failed merge rolls the state handle back to its
+                    # committed snapshot, which drops the staged prop.
                     # micro_batch rides the SAME driver-side bound as the
                     # static compile: the state upsert then lands in one
                     # write job with footer-read counts (no counts pass).
@@ -319,17 +321,6 @@ class MatView:
                     n_groups, _ = self.state.merge(
                         rows, on=_GK, stable_input=True, micro_batch=small
                     )
-                except BaseException:
-                    # merge rolled back (manifest restored / staged entry
-                    # unstaged) — drop the staged prop so a later unrelated
-                    # commit cannot carry a version the state never reached
-                    if (
-                        self.state.manifest.props.get("mv_base_version")
-                        == str(cur)
-                    ):
-                        prev = self.base_version
-                        self.state.manifest.props["mv_base_version"] = str(prev)
-                    raise
                 finally:
                     rows.unpersist()
                 self.base_version = cur

@@ -819,36 +819,22 @@ class VectorIndex:
                 # references the batch TWICE (victims keys + insert), and
                 # stable_input lets insert skip its own re-materialization
                 batch = self._index_rows(ins).localCheckpoint(eager=True)
-                v0 = self.rows.manifest.version
+                # a failed merge rolls the store back to its committed
+                # snapshot, which drops the staged stamp with it
                 self.rows.manifest.props[stamp] = cur
-                try:
-                    added, staged = self.rows.merge(
-                        batch, on="vec_id", extra_victim_keys=dels,
-                        stable_input=True,
-                    )
-                except BaseException:
-                    # a pre-commit rejection leaves the in-memory props
-                    # polluted (insert's restore path covers only the
-                    # mutating tail) — unstamp so a later unrelated
-                    # commit cannot persist a stamp for an unapplied delta
-                    if self.rows.manifest.version == v0:
-                        self.rows.manifest.props.pop(stamp, None)
-                    raise
+                added, staged = self.rows.merge(
+                    batch, on="vec_id", extra_victim_keys=dels,
+                    stable_input=True,
+                )
                 removed += staged
         if self.bands is not None:
             if self.bands.manifest.props.get(stamp) != cur:
                 b_batch = self._band_rows(ins).localCheckpoint(eager=True)
-                v0 = self.bands.manifest.version
                 self.bands.manifest.props[stamp] = cur
-                try:
-                    b_added, b_staged = self.bands.merge(
-                        b_batch, on="vec_id", extra_victim_keys=dels,
-                        stable_input=True,
-                    )
-                except BaseException:
-                    if self.bands.manifest.version == v0:
-                        self.bands.manifest.props.pop(stamp, None)
-                    raise
+                b_added, b_staged = self.bands.merge(
+                    b_batch, on="vec_id", extra_victim_keys=dels,
+                    stable_input=True,
+                )
                 if not self.meta.get("ivf", True):
                     added = b_added // self.meta["lsh_bands"]
                     removed += b_staged // self.meta["lsh_bands"]

@@ -41,8 +41,11 @@ keeps the same information.
 
 from __future__ import annotations
 
+import contextlib
+import functools
 import json
 import os
+import time
 import uuid
 from typing import Any, Callable, Iterable, Sequence
 
@@ -92,6 +95,63 @@ def _default_schema(cols: int) -> T.StructType:
     """``Store::new(cols)`` has positional, homogeneously-typed columns
     (``src/lib.rs:4-5,80-87``); default them to strings named c0..cN-1."""
     return T.StructType([T.StructField(f"c{i}", T.StringType(), True) for i in range(cols)])
+
+
+def _rolls_back(method):
+    """The one rollback rule for every ``Store`` mutation: like the
+    reference's ``&mut self`` ops (``src/lib.rs:140-187``) it changes
+    nothing unless it finishes. A mutation stages freely in the in-memory
+    manifest; if it raises before its commit moved the version, the
+    handle reloads its committed snapshot and the error re-raises. Props
+    the caller staged for the commit are dropped with it; files the
+    failed attempt wrote are left for ``vacuum``.
+
+    The reload pins the version, so a handle opened at an older snapshot
+    (``open(version=...)``, ``as_of``, tag) stays there instead of
+    fast-forwarding to the latest. Session-scoped custom indexer objects
+    are carried over (they are not serializable — reopen semantics);
+    every version-keyed cache is dropped (entries may reference posting
+    parts staged by the failed attempt). If the pinned v{N}.json was
+    vacuumed meanwhile, the latest version loads instead (r8 ADVICE):
+    the state a reopen would see, and FileNotFoundError never masks the
+    original error."""
+
+    @functools.wraps(method)
+    def wrapper(self, *args, **kwargs):
+        v_before = self.manifest.version
+        try:
+            return method(self, *args, **kwargs)
+        except BaseException:
+            if self.manifest.version != v_before:
+                raise
+            customs = {
+                c: s.custom
+                for c, s in self.manifest.indices.items()
+                if s.custom is not None
+            }
+            try:
+                self.manifest = Manifest.load(self.path, version=v_before)
+            except FileNotFoundError:
+                self.manifest = Manifest.load(self.path)
+            for c, cu in customs.items():
+                if c in self.manifest.indices:
+                    self.manifest.indices[c].custom = cu
+            for df in self._posting_cache.values():
+                try:
+                    df.unpersist()
+                except Exception:
+                    pass
+            for cache in (
+                self._posting_cache,
+                self._posting_maps,
+                self._bloom_maps,
+                self._bloom_fetched,
+                self._stats_np,
+            ):
+                cache.clear()
+            raise
+
+    return wrapper
 
 
 class Store:
@@ -168,6 +228,7 @@ class Store:
             version = int(head.props[key])
         return cls(spark, path, Manifest.load(path, version))
 
+    @_rolls_back
     def tag(self, name: str, version: int | None = None) -> int:
         """Record a NAMED snapshot ref (Iceberg tag): ``name`` → the
         current (or given) version, persisted in the manifest props via
@@ -255,6 +316,7 @@ class Store:
 
     # -- insert (src/lib.rs:178-187) ----------------------------------------
 
+    @_rolls_back
     def insert(
         self,
         rows: DataFrame | Iterable[Sequence[Any]],
@@ -357,13 +419,7 @@ class Store:
         self._enforce_constraints(df)
         watermark = self.manifest.rowid
         if micro_batch:
-            v_before = self.manifest.version
-            try:
-                return self._insert_tagged_micro(df, schema, watermark)
-            except BaseException:
-                if self.manifest.version == v_before:
-                    self._restore_manifest_from_disk(version=v_before)
-                raise
+            return self._insert_tagged_micro(df, schema, watermark)
         from .functions import ensure_parallelism
 
         tagged = (
@@ -371,7 +427,6 @@ class Store:
             .withColumn("__pid", F.spark_partition_id())
             .withColumn("__mid", F.monotonically_increasing_id())
         )
-        v_before = self.manifest.version
         try:
             # lazy cut: the counts collect (the tag pass's first action)
             # materializes the checkpoint in the SAME job — an eager
@@ -402,67 +457,8 @@ class Store:
                     F.max("__mid").alias("hi"),
                 ).collect()
             return self._insert_tagged(tagged, schema, watermark, stats)
-        except BaseException:
-            # a failure anywhere before the commit leaves the IN-MEMORY
-            # manifest polluted: the batch's data files are registered,
-            # rowid/next_file_id advanced, posting parts appended — a
-            # LATER successful commit would durably persist the failed
-            # batch's rows (and, under merge, its victims' tombstones
-            # would be gone while the half-inserted rows stayed: a
-            # permanent duplicate). The durable truth is the on-disk
-            # manifest — restore it wholesale; the orphan parquet the
-            # failed attempt wrote is inert and vacuumable. A failure
-            # AFTER the commit (version moved) restores to the same
-            # committed state: also correct.
-            if self.manifest.version == v_before:
-                self._restore_manifest_from_disk(version=v_before)
-            raise
         finally:
             tagged.unpersist()
-
-    def _restore_manifest_from_disk(self, version: int | None = None) -> None:
-        """Reset the in-memory manifest to the snapshot this handle held
-        BEFORE the failed mutation — ``version`` pins it (v{N}.json is
-        still on disk). Loading CURRENT unconditionally would silently
-        fast-forward a handle opened at an older snapshot (``open(
-        version=...)``, ``as_of``, tag) to the newest committed version
-        when a write on it fails, so subsequent reads on the same handle
-        would see different data than before the failed write. For a
-        head handle ``version`` equals CURRENT and nothing changes.
-        Session-scoped custom indexer objects are carried over (they are
-        not serializable — reopen semantics); every version-keyed cache
-        is dropped (entries may reference posting parts staged by the
-        failed attempt).
-
-        If the pinned v{N}.json was vacuumed between opening this handle
-        and the failed write, fall back to loading CURRENT rather than
-        letting FileNotFoundError mask the original write error (r8
-        ADVICE): the handle fast-forwards in that narrow
-        vacuumed-under-a-pinned-handle race, which is the same state a
-        reopen would see — and strictly better than swallowing the real
-        failure."""
-        customs = {
-            c: s.custom
-            for c, s in self.manifest.indices.items()
-            if s.custom is not None
-        }
-        try:
-            self.manifest = Manifest.load(self.path, version=version)
-        except FileNotFoundError:
-            self.manifest = Manifest.load(self.path)
-        for c, cu in customs.items():
-            if c in self.manifest.indices:
-                self.manifest.indices[c].custom = cu
-        for key in list(self._posting_cache):
-            try:
-                self._posting_cache[key].unpersist()
-            except Exception:
-                pass
-            del self._posting_cache[key]
-        self._posting_maps.clear()
-        self._bloom_maps.clear()
-        self._bloom_fetched.clear()
-        self._stats_np.clear()
 
     # literal (Python-list) batches at or below this many rows insert
     # entirely on the driver: constraint checks in plain Python, rowids by
@@ -604,21 +600,13 @@ class Store:
         batch_rel = os.path.join(
             "data", f"b{self.manifest.version + 1}-{uuid.uuid4().hex[:8]}"
         )
-        v_before = self.manifest.version
-        try:
-            out_dir = self._abs(batch_rel)
-            os.makedirs(out_dir, exist_ok=True)
-            pq.write_table(table, os.path.join(out_dir, "part-00000.parquet"))
-            self._register_and_index(batch_rel)
-            self.manifest.rowid = watermark + n
-            self._commit()
-            return n
-        except BaseException:
-            # same rollback contract as insert(): the durable truth is the
-            # on-disk manifest; orphan parquet is inert and vacuumable
-            if self.manifest.version == v_before:
-                self._restore_manifest_from_disk(version=v_before)
-            raise
+        out_dir = self._abs(batch_rel)
+        os.makedirs(out_dir, exist_ok=True)
+        pq.write_table(table, os.path.join(out_dir, "part-00000.parquet"))
+        self._register_and_index(batch_rel)
+        self.manifest.rowid = watermark + n
+        self._commit()
+        return n
 
     def _enforce_constraints_rows(self, data: list[tuple]) -> None:
         """Pure-Python twin of :meth:`_enforce_constraints` for literal
@@ -912,6 +900,7 @@ class Store:
 
     CONSTRAINT_KINDS = ("not_null", "unique")
 
+    @_rolls_back
     def add_constraint(self, column: int | str, kind: str = "not_null") -> None:
         """Declare a WRITE-TIME constraint (EXTENSION — the reference
         validates arity only, ``src/lib.rs:179``): every subsequent
@@ -939,6 +928,7 @@ class Store:
             self.manifest.props["constraints"] = json.dumps(cons)
             self._commit()
 
+    @_rolls_back
     def drop_constraint(self, column: int | str, kind: str) -> None:
         name = self.colnames[column] if isinstance(column, int) else column
         cons = self._constraints()
@@ -1008,6 +998,7 @@ class Store:
                         f"{hit[0][c]!r} already exists"
                     )
 
+    @_rolls_back
     def merge(
         self,
         rows: DataFrame | Iterable[Sequence[Any]],
@@ -1026,8 +1017,9 @@ class Store:
         Mechanics: victims are staged as a merge-on-read tombstone (cost ∝
         victims; the key-membership scan is column-pruned to (rowid, key)),
         the staged tombstone list rides in the insert's own commit. If
-        anything fails before that commit, the on-disk manifest is
-        untouched (the orphan tombstone file is inert and vacuumable).
+        anything fails before that commit, the handle rolls back to its
+        committed snapshot (:func:`_rolls_back`) and the orphan tombstone
+        dir is left for ``vacuum``.
         The batch is appended as-is — duplicate keys WITHIN the batch are
         all inserted, like ``insert``. NULL keys follow SQL join
         semantics: a NULL-keyed batch row never matches an existing
@@ -1103,36 +1095,9 @@ class Store:
                 import shutil
 
                 shutil.rmtree(self._abs(victims_rel), ignore_errors=True)
-        v_before = self.manifest.version
-        try:
-            inserted = self.insert(
-                rows, stable_input=stable_input, micro_batch=micro_batch
-            )
-        except BaseException:
-            # insert rejected the batch (constraint violation, bad schema,
-            # write failure) BEFORE committing. Unstage the tombstones so
-            # the next successful commit does not silently delete the
-            # victims of an upsert that never happened. Two sub-cases:
-            # a failure in insert's mutating tail already restored the
-            # whole manifest from disk (see insert), wiping the staged
-            # entry — then only the orphan tombstone dir remains to
-            # delete; a pre-mutation rejection (constraint/validation)
-            # leaves the staged entry in memory — unstage it here.
-            # Guarded on the manifest version: if the failure landed
-            # AFTER insert's commit (e.g. an interrupt in post-commit
-            # cache eviction), the on-disk manifest references the
-            # tombstone file and the merge IS durable — rolling back
-            # then would delete a committed file and corrupt every
-            # subsequent read.
-            if n_staged and self.manifest.version == v_before:
-                if victims_rel in self.manifest.tombstones:
-                    self.manifest.tombstones.remove(victims_rel)
-                    self.manifest.tombstone_rows -= n_staged
-                    self.manifest.pending_cdf = []
-                import shutil
-
-                shutil.rmtree(self._abs(victims_rel), ignore_errors=True)
-            raise
+        inserted = self.insert(
+            rows, stable_input=stable_input, micro_batch=micro_batch
+        )
         return (inserted, n_staged)
 
     def _commit(self) -> None:
@@ -1273,6 +1238,7 @@ class Store:
 
     # -- indices (src/lib.rs:195-205, src/idx.rs) ---------------------------
 
+    @_rolls_back
     def index(self, column: int | str | Sequence[int | str], indexer: Any = "hash") -> None:
         """Create (or replace — ``src/lib.rs:204``) an index on ``column``.
 
@@ -1333,6 +1299,7 @@ class Store:
         self.manifest.indices[name] = spec  # silent replace, parity :204
         self._commit()
 
+    @_rolls_back
     def drop_index(self, column: int | str) -> None:
         """Remove the index on ``column`` (metadata commit; orphaned
         posting files are retired by ``vacuum``). The reference only
@@ -2593,6 +2560,7 @@ class Store:
         tombstone path (see :meth:`delete_filter`)."""
         return self.delete_filter(conds, None, defer=defer)
 
+    @_rolls_back
     def delete_filter(
         self,
         conds: Sequence[Condition],
@@ -2782,14 +2750,8 @@ class Store:
         PURELY driver-side metadata (one small JSON per retained version;
         bounded by vacuum retention) — zero Spark jobs at any table size.
         """
-        mdir = Manifest._dir(self.path)
-        versions = sorted(
-            int(f[1:-5])
-            for f in os.listdir(mdir)
-            if f.startswith("v") and f.endswith(".json")
-        )
         rows = []
-        for v in versions:
+        for v in Manifest.versions(self.path):
             m = Manifest.load(self.path, v)
             rows.append(
                 (
@@ -2809,6 +2771,7 @@ class Store:
             "tombstone_rows long, n_files int, rowid_watermark long, n_indices int",
         )
 
+    @_rolls_back
     def restore(self, version: int) -> None:
         """RESTORE the table to snapshot ``version`` — as a NEW commit
         (the lakehouse undo button): the current manifest's successor
@@ -2850,13 +2813,7 @@ class Store:
         from .manifest import PartedFileList
 
         mdir = Manifest._dir(self.path)
-        # version manifests are exactly v<digits>.json — manifest PART
-        # files (v<digits>-files-p<k>.json) are cleaned separately below
-        versions = sorted(
-            int(m.group(1))
-            for m in (re.fullmatch(r"v(\d+)\.json", f) for f in os.listdir(mdir))
-            if m
-        )
+        versions = Manifest.versions(self.path)
         keep_versions = set(versions[-retain_versions:])
         keep_versions.add(self.manifest.version)
         live: set[str] = set()
@@ -2904,12 +2861,23 @@ class Store:
         for v in versions:
             if v not in keep_versions:
                 os.remove(os.path.join(mdir, f"v{v}.json"))
-        # manifest part files not referenced by any retained version
-        # (part REUSE means a part may be shared across versions — only
-        # the reference set decides liveness, never the name's version)
+        # manifest part files (v<N>-files-p<k>[-<writer token>].json) not
+        # referenced by any retained version (part REUSE means a part may
+        # be shared across versions — only the reference set decides
+        # liveness, never the name's version), and the tmp files of a
+        # commit whose writer died mid-way (.v<N>.json.<token>.tmp,
+        # .CURRENT.<token>.tmp) once older than a 10-minute grace that
+        # spares any commit still in flight
+        stale = time.time() - 600
         for f in os.listdir(mdir):
-            if re.fullmatch(r"v\d+-files-p\d+\.json", f) and f not in live_mparts:
-                os.remove(os.path.join(mdir, f))
+            full = os.path.join(mdir, f)
+            if re.fullmatch(r"v\d+-files-p\d+(-[0-9a-f]+)?\.json", f):
+                if f not in live_mparts:
+                    os.remove(full)
+            elif re.fullmatch(r"\.(v\d+\.json|CURRENT)\.[0-9a-f]+\.tmp", f):
+                with contextlib.suppress(FileNotFoundError):
+                    if os.path.getmtime(full) < stale:
+                        os.remove(full)
         return removed
 
     def describe(self) -> DataFrame:
@@ -3013,6 +2981,7 @@ class Store:
             F.max(name).alias("max_val"),
         )
 
+    @_rolls_back
     def add_column(self, name: str, dtype: T.DataType | str) -> None:
         """Schema evolution: append a NULLABLE column — a metadata-only
         commit. No data file is touched: parquet reads against the widened
@@ -3031,6 +3000,7 @@ class Store:
         ).json()
         self._commit()
 
+    @_rolls_back
     def drop_column(self, name: str) -> None:
         """Schema evolution: remove a column — metadata-only; the bytes
         stay in the files but every read projects them away. Refuses to
@@ -3312,6 +3282,7 @@ class Store:
         self.last_changes_used_cdf = tgt.last_changes_used_cdf
         return out
 
+    @_rolls_back
     def apply_changes(self, delta: DataFrame) -> tuple[int, int]:
         """Apply an upstream store's ``changes()`` delta to this store —
         the consumer half of CDC: a follower converges to the leader by
@@ -3349,12 +3320,6 @@ class Store:
         if done is not None:
             return done
         delta = delta.persist()
-        # All in-memory manifest staging below is guarded by a snapshot:
-        # any failure (the collision guard, an IO error mid-write) restores
-        # the pre-delta manifest so a later unrelated _commit can never
-        # persist a rejected delta's staged deletes. Orphan parquet dirs
-        # left behind are inert and vacuumable, same as merge().
-        snapshot = Manifest.from_json(self.manifest.to_json())
         try:
             ins = delta.filter(F.col("change_type") == "insert").select(
                 ROWID, *self.manifest.schema.fieldNames()
@@ -3449,9 +3414,6 @@ class Store:
                     self.manifest.pending_cdf = None
                 self._commit()
             return n_ins, n_del
-        except BaseException:
-            self.manifest = snapshot
-            raise
         finally:
             delta.unpersist()
 
@@ -3479,65 +3441,50 @@ class Store:
         ins = [r for r in rows if r["change_type"] == "insert"]
         del_ids = {int(r[ROWID]) for r in rows if r["change_type"] == "delete"}
         n_ins = len(ins)
-        snapshot = Manifest.from_json(self.manifest.to_json())
-        try:
-            # follower rowid sets, footer/pyarrow-read (zero jobs)
-            all_ids: set[int] = set()
-            for f in self.manifest.files:
-                all_ids.update(
-                    pq.read_table(self._abs(f.path), columns=[ROWID])
-                    .column(ROWID)
-                    .to_pylist()
-                )
-            tomb: set[int] = set()
-            for rel in self.manifest.tombstones:
-                d = self._abs(rel)
-                for fn in os.listdir(d):
-                    if fn.endswith(".parquet"):
-                        tomb.update(
-                            pq.read_table(os.path.join(d, fn), columns=[ROWID])
-                            .column(ROWID)
-                            .to_pylist()
-                        )
-            live = all_ids - tomb
-            ins_ids = {int(r[ROWID]) for r in ins}
-            if ins_ids and self.manifest.files:
-                n_clash = len(ins_ids & live)
-                if n_clash:
-                    raise ValueError(
-                        f"{n_clash} delta insert rowid(s) collide with live "
-                        "follower rows — the delta was applied twice, or the "
-                        "follower took a local write"
+        # follower rowid sets, footer/pyarrow-read (zero jobs)
+        all_ids: set[int] = set()
+        for f in self.manifest.files:
+            all_ids.update(
+                pq.read_table(self._abs(f.path), columns=[ROWID])
+                .column(ROWID)
+                .to_pylist()
+            )
+        tomb: set[int] = set()
+        for rel in self.manifest.tombstones:
+            d = self._abs(rel)
+            for fn in os.listdir(d):
+                if fn.endswith(".parquet"):
+                    tomb.update(
+                        pq.read_table(os.path.join(d, fn), columns=[ROWID])
+                        .column(ROWID)
+                        .to_pylist()
                     )
-            # resurrection purge: un-mask tombstoned rowids the delta
-            # re-inserts (same commit); the rest insert physically
-            res_ids = ins_ids & tomb
-            n_res = len(res_ids)
-            if n_res:
-                keep = sorted(tomb - res_ids)
-                keep_rel = os.path.join(
-                    "tomb", f"p{self.manifest.version + 1}-{uuid.uuid4().hex[:8]}"
+        live = all_ids - tomb
+        ins_ids = {int(r[ROWID]) for r in ins}
+        if ins_ids and self.manifest.files:
+            n_clash = len(ins_ids & live)
+            if n_clash:
+                raise ValueError(
+                    f"{n_clash} delta insert rowid(s) collide with live "
+                    "follower rows — the delta was applied twice, or the "
+                    "follower took a local write"
                 )
-                self._write_rowid_part(keep_rel, keep)
-                self.manifest.tombstones = [keep_rel] if keep else []
-                self.manifest.tombstone_rows = len(keep)
-                ins = [r for r in ins if int(r[ROWID]) not in res_ids]
-            n_del = 0
-            if self.manifest.files:
-                victims = sorted(del_ids & live)
-                n_del = len(victims)
-                if n_del:
-                    victims_rel = os.path.join(
-                        "tomb", f"r{self.manifest.version + 1}-{uuid.uuid4().hex[:8]}"
-                    )
-                    self._write_rowid_part(victims_rel, victims)
-                    self.manifest.tombstones.append(victims_rel)
-                    self.manifest.tombstone_rows += n_del
-            if ins:
-                import pyarrow as pa
-                from pyspark.sql.pandas.types import to_arrow_schema
+        # resurrection purge: un-mask tombstoned rowids the delta
+        # re-inserts (same commit); the rest insert physically
+        res_ids = ins_ids & tomb
+        n_res = len(res_ids)
+        ins = [r for r in ins if int(r[ROWID]) not in res_ids]
+        # the data file's Arrow table is built BEFORE anything is staged:
+        # un-orderable sort values or cells pyarrow cannot coerce the way
+        # the Spark writer would decline here, with nothing to undo, and
+        # the distributed path decides on an untouched manifest
+        table = None
+        if ins:
+            import pyarrow as pa
+            from pyspark.sql.pandas.types import to_arrow_schema
 
-                dts = [f.dataType for f in schema.fields]
+            dts = [f.dataType for f in schema.fields]
+            try:
                 tuples = [
                     (int(r[ROWID]),)
                     + tuple(self._driver_cell(dt, r[c]) for dt, c in zip(dts, names))
@@ -3553,29 +3500,42 @@ class Store:
                     [dict(zip([ROWID] + list(names), t)) for t in tuples],
                     schema=to_arrow_schema(self._schema_with_rowid()),
                 )
-                batch_rel = os.path.join(
-                    "data", f"r{self.manifest.version + 1}-{uuid.uuid4().hex[:8]}"
+            except (TypeError, pa_err.ArrowInvalid, pa_err.ArrowTypeError):
+                return None
+        if n_res:
+            keep = sorted(tomb - res_ids)
+            keep_rel = os.path.join(
+                "tomb", f"p{self.manifest.version + 1}-{uuid.uuid4().hex[:8]}"
+            )
+            self._write_rowid_part(keep_rel, keep)
+            self.manifest.tombstones = [keep_rel] if keep else []
+            self.manifest.tombstone_rows = len(keep)
+        n_del = 0
+        if self.manifest.files:
+            victims = sorted(del_ids & live)
+            n_del = len(victims)
+            if n_del:
+                victims_rel = os.path.join(
+                    "tomb", f"r{self.manifest.version + 1}-{uuid.uuid4().hex[:8]}"
                 )
-                out_dir = self._abs(batch_rel)
-                os.makedirs(out_dir, exist_ok=True)
-                pq.write_table(table, os.path.join(out_dir, "part-00000.parquet"))
-                self._register_and_index(batch_rel)
-            if n_ins:
-                self.manifest.rowid = max(self.manifest.rowid, max(ins_ids) + 1)
-            if n_ins or n_del:
-                if n_del or n_res:
-                    self.manifest.pending_cdf = None
-                self._commit()
-            return n_ins, n_del
-        except (TypeError, pa_err.ArrowInvalid, pa_err.ArrowTypeError):
-            # un-orderable sort values or cells pyarrow cannot coerce the
-            # way the Spark writer would: nothing committed — restore the
-            # staging and let the distributed path decide
-            self.manifest = snapshot
-            return None
-        except BaseException:
-            self.manifest = snapshot
-            raise
+                self._write_rowid_part(victims_rel, victims)
+                self.manifest.tombstones.append(victims_rel)
+                self.manifest.tombstone_rows += n_del
+        if table is not None:
+            batch_rel = os.path.join(
+                "data", f"r{self.manifest.version + 1}-{uuid.uuid4().hex[:8]}"
+            )
+            out_dir = self._abs(batch_rel)
+            os.makedirs(out_dir, exist_ok=True)
+            pq.write_table(table, os.path.join(out_dir, "part-00000.parquet"))
+            self._register_and_index(batch_rel)
+        if n_ins:
+            self.manifest.rowid = max(self.manifest.rowid, max(ins_ids) + 1)
+        if n_ins or n_del:
+            if n_del or n_res:
+                self.manifest.pending_cdf = None
+            self._commit()
+        return n_ins, n_del
 
     def _write_rowid_part(self, rel: str, rowids: list[int]) -> None:
         """One-file tombstone part written driver-side (pyarrow), matching
@@ -3691,6 +3651,7 @@ class Store:
             return True
         return False
 
+    @_rolls_back
     def compact(
         self,
         target_files: int | None = None,
